@@ -68,6 +68,52 @@ def _probe_degraded(pre_ms: float | None, post_ms: float | None) -> bool:
     )
 
 
+def _load1() -> float | None:
+    """The 1-minute load average, rounded to 0.1; None where the
+    platform cannot report it."""
+    try:
+        return round(os.getloadavg()[0], 1)
+    except OSError:
+        return None
+
+
+def _calm_wait() -> tuple[float | None, bool | None]:
+    """CALM GATE (discipline by code): three consecutive bench artifacts
+    were snapshotted during neighbor storms (r4-r6, ambient load 11-14)
+    and recorded 40%+ phantom regressions, so the gate lives in code
+    rather than in a note asking for a calm window.  If the
+    1-minute load exceeds SPARK_GRAFT_BENCH_CALM_GATE (default 4), wait
+    for calm — re-sampling every 30s up to SPARK_GRAFT_BENCH_CALM_WAIT
+    seconds (default 600) — and if the storm outlasts the wait, run
+    anyway but stamp the artifact "noisy": true so no reader can mistake
+    the number for an engine regression.  Progress goes to stderr.
+
+    Returns ``(load1, noisy)``; noisy is None (not false) when load could
+    not be sampled: an unknown-load run must not read as verified-calm.
+    """
+    calm_gate = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_GATE", "4"))
+    calm_wait = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_WAIT", "600"))
+    waited = 0.0
+    load1 = _load1()
+    while load1 is not None and load1 > calm_gate and waited < calm_wait:
+        print(
+            f"calm-gate: ambient load {load1} > {calm_gate}, "
+            f"waiting ({waited:.0f}/{calm_wait:.0f}s)",
+            file=sys.stderr,
+        )
+        time.sleep(30)
+        waited += 30
+        load1 = _load1()
+    noisy = (load1 > calm_gate) if load1 is not None else None
+    if noisy:
+        print(
+            f"calm-gate: storm outlasted {calm_wait:.0f}s wait "
+            f"(load {load1}); artifact will be stamped noisy",
+            file=sys.stderr,
+        )
+    return load1, noisy
+
+
 def main() -> int:
     # 1-min load average BEFORE the session spins up, so it measures the
     # ambient (neighbor) load, not this bench's own 32 threads.  This
@@ -75,45 +121,7 @@ def main() -> int:
     # inflate the whole suite 2-3x uniformly (observed: same commit, 25s
     # at ambient load ~1 vs 68-72s at load ~15-30); reporting it lets a
     # reader separate engine regressions from measurement-window noise.
-    try:
-        ambient_load1 = round(os.getloadavg()[0], 1)
-    except OSError:
-        ambient_load1 = None
-    # CALM GATE (discipline by code): three consecutive driver artifacts
-    # were snapshotted during neighbor storms (r4-r6, ambient load 11-14)
-    # and recorded 40%+ phantom regressions; the memo asking for a calm
-    # window was ignored twice, so the gate now lives here.  If the
-    # 1-minute load exceeds SPARK_GRAFT_BENCH_CALM_GATE (default 4),
-    # wait for calm — re-sampling every 30s up to
-    # SPARK_GRAFT_BENCH_CALM_WAIT seconds (default 600) — and if the
-    # storm outlasts the wait, run anyway but stamp the artifact
-    # "noisy": true so no reader can mistake the number for an engine
-    # regression.  Progress goes to stderr; stdout stays the one line.
-    calm_gate = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_GATE", "4"))
-    calm_wait = float(os.environ.get("SPARK_GRAFT_BENCH_CALM_WAIT", "600"))
-    calm_waited = 0.0
-    while (
-        ambient_load1 is not None
-        and ambient_load1 > calm_gate
-        and calm_waited < calm_wait
-    ):
-        print(
-            f"calm-gate: ambient load {ambient_load1} > {calm_gate}, "
-            f"waiting ({calm_waited:.0f}/{calm_wait:.0f}s)",
-            file=sys.stderr,
-        )
-        time.sleep(30)
-        calm_waited += 30
-        ambient_load1 = round(os.getloadavg()[0], 1)
-    # noisy is None (not false) when load could not be sampled: an
-    # unknown-load run must not read as verified-calm.
-    noisy = (ambient_load1 > calm_gate) if ambient_load1 is not None else None
-    if noisy:
-        print(
-            f"calm-gate: storm outlasted {calm_wait:.0f}s wait "
-            f"(load {ambient_load1}); artifact will be stamped noisy",
-            file=sys.stderr,
-        )
+    ambient_load1, noisy = _calm_wait()
     probe_ms_pre = _cpu_probe_ms()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -347,14 +355,17 @@ def main() -> int:
     # makespan under FAIR scheduling with `workers` threads; `queries_sum` =
     # sum of per-query walls under contention (the round-over-round
     # comparable).  Full per-query map + deltas go to BENCH_LOCAL.json.
-    # 15 slowest + every query the PREVIOUS artifact carried, so the
+    # 15 slowest + the PREVIOUS artifact's 15 slowest, so the
     # round-over-round perf join never degenerates to 4 rows or emits a
     # phantom "dropped_from_bench" for a query that merely left the
-    # top-N (r14's PERF could compare only 4 queries).  ~20 entries x
-    # ~45 bytes stays far under the r02 tail-capture truncation bound
-    # (r02 died mid-way through a 92-entry map).
+    # top-N (r14's PERF could compare only 4 queries).  Carrying only
+    # the previous top 15 (not its whole map) keeps the map at <= 30
+    # entries instead of growing every round; 30 x ~45 bytes stays far
+    # under the r02 tail-capture truncation bound (r02 died mid-way
+    # through a 92-entry map).
     top = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:15])
-    for q in prev.get("queries", {}):
+    prev_q = prev.get("queries", {})
+    for q in sorted(prev_q, key=lambda q: -float(prev_q[q]))[:15]:
         if q in timings:
             top.setdefault(q, timings[q])
     probe_ms_post = _cpu_probe_ms()

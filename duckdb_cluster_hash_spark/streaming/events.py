@@ -244,6 +244,14 @@ def staged_stream_shuffle_partitions(
     data instead of with a constant.  Partition count never changes
     which rows a stateful operator sees for a key (hash partitioning by
     key is total), so results are unchanged at any width.
+
+    The derived width applies only to FRESH checkpoints: a query that
+    restarts from an existing checkpoint keeps the partition count
+    recorded there (Spark pins it, ignoring the session setting).  In
+    the catalog only ``events_streaming_routed_sink`` sets a checkpoint
+    location, and it wipes it at entry; the other streaming queries run
+    on Spark's temporary checkpoints, fresh each run.  A caller of
+    ``route_events_to_nodes`` that reuses a checkpoint keeps its width.
     """
     total = 0
     for root, _dirs, files in os.walk(stage_dir):
